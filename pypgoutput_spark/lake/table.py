@@ -79,7 +79,6 @@ import threading
 import time
 import uuid
 from typing import Dict, List, Optional, Sequence, Tuple
-from urllib.parse import unquote
 
 from pyspark.sql import functions as F
 
@@ -90,11 +89,11 @@ CURRENT = "CURRENT"
 #
 # Per-directory min/max column statistics ("zone maps", the Iceberg
 # manifest column-stats / Delta file-stats analog). Opt-in via
-# ``props["stats_cols"]``: every commit that stages base or delta
-# directories records min/max of those columns per directory in the
-# snapshot (``dir_stats``), and :meth:`LakeTable.scan` prunes
-# directories whose range provably cannot match before any file is
-# opened. Bucket hashing prunes the KEY dimension (``lookup``); zone
+# ``props["stats_cols"]``: the bucket writer computes min/max of those
+# columns for every base or delta directory it stages, the commit
+# records them in the snapshot (``dir_stats``), and :meth:`LakeTable.scan`
+# prunes directories whose range provably cannot match before any file
+# is opened. Bucket hashing prunes the KEY dimension (``lookup``); zone
 # maps prune the TIME/VALUE dimension — per-commit directories of a CDC
 # mirror have tight ranges on monotone-with-time columns, so a
 # "recent window" scan at 100 TB touches only the trailing commits.
@@ -104,7 +103,11 @@ CURRENT = "CURRENT"
 
 def _stat_store(v):
     """Normalize a collected min/max into a JSON-storable value whose
-    comparison semantics are recoverable from the column's DDL type."""
+    comparison semantics are recoverable from the column's DDL type.
+    Arrow hands timestamps over tz-aware in the session time zone; they
+    are stored as naive wall time, the spelling scan bounds compare in."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.replace(tzinfo=None)
     if v is None:
         return None
     if isinstance(v, bool):
@@ -214,15 +217,6 @@ def _normalize_ranges(ranges: dict) -> dict:
     return out
 
 
-def _dir_key(path: str) -> Tuple[str, ...]:
-    """Last two path components, URL-decoded — maps an executor-reported
-    file URI (file:///…/commit-XXXX-hash/_bucket=N/part-…) back to the
-    manifest's staging-dir path (…/commit-XXXX-hash/_bucket=N); the
-    commit dir's uuid suffix makes the pair unique within a commit."""
-    parts = unquote(path).rstrip("/").split("/")
-    return tuple(parts[-2:])
-
-
 def _direct_bucket_writer(stage: str, stat_cols: tuple = ()):
     """Task-side bucket writer for :meth:`LakeTable.write_buckets`: a
     ``mapInArrow`` kernel that streams each bucket's rows into one
@@ -233,14 +227,13 @@ def _direct_bucket_writer(stage: str, stat_cols: tuple = ()):
     itself is dropped from the files (the dynamic-partition writer's
     behavior — readers apply the table DDL, which has no ``_bucket``).
 
-    ``stat_cols``: STRING-domain zone-map columns whose per-dir min/max
-    ride the write itself (the Iceberg manifest-stats shape) instead of
-    a post-write stats job; each entry is (name, source_col, is_struct)
-    — ``is_struct`` marks the delta spelling ``r_<name>.v``. Restricted
-    to strings because UTF-8 byte order ≡ code-point order, so arrow
-    ``min_max`` agrees exactly with both the Spark job it replaces and
-    the Python comparisons pruning uses; nulls are skipped on every
-    path (a delete row's NULL carrier can never match a range)."""
+    ``stat_cols``: (name, source column) pairs whose per-dir min/max
+    ride the write itself (the Iceberg manifest-stats shape). A source
+    other than ``name`` is a stats-only projection (the typed cast of a
+    delta's ``r_<name>.v``) and is dropped before the parquet write.
+    Values order as Spark orders them: nulls are skipped (a delete
+    row's NULL carrier can never match a range), NaN sorts above every
+    number, and a column with no non-null value records [None, None]."""
 
     def write(batches):
         import json as _json
@@ -251,13 +244,29 @@ def _direct_bucket_writer(stage: str, stat_cols: tuple = ()):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        def spark_key(v):  # NaN above every number, as Spark orders it
+            return (v != v, v)
+
+        def min_max(arr):
+            mm = pc.min_max(arr)
+            mn, mx = mm["min"].as_py(), mm["max"].as_py()
+            if mn is not None and pa.types.is_floating(arr.type):
+                n_nan = pc.sum(pc.is_nan(arr)).as_py()
+                if n_nan:  # arrow skips NaN; an all-NaN array is (inf, -inf)
+                    mx = float("nan")
+                    if n_nan == len(arr) - arr.null_count:
+                        mn = mx
+            return mn, mx
+
+        drop = ["_bucket"] + [src for name, src in stat_cols if src != name]
         writers: dict = {}  # bucket -> [dir, file, ParquetWriter, stats]
         for b in batches:
             t = pa.Table.from_batches([b])
             col = t.column("_bucket")
-            data = t.drop_columns(["_bucket"])
+            data = t.drop_columns(drop)
             for bk in pc.unique(col).to_pylist():
-                sub = data.filter(pc.equal(col, bk))
+                mask = pc.equal(col, bk)
+                sub = data.filter(mask)
                 w = writers.get(bk)
                 if w is None:
                     d = _os.path.join(
@@ -269,30 +278,21 @@ def _direct_bucket_writer(stage: str, stat_cols: tuple = ()):
                         fp, sub.schema, compression="snappy"), {}]
                     writers[bk] = w
                 w[2].write_table(sub)
-                for name, src, is_struct in stat_cols:
-                    arr = sub.column(src)
-                    if is_struct:
-                        arr = pc.struct_field(arr, "v")
-                    mm = pc.min_max(arr)  # nulls skipped
-                    mn, mx = mm["min"].as_py(), mm["max"].as_py()
+                for name, src in stat_cols:
+                    mn, mx = min_max(t.column(src).filter(mask))
                     if mn is None:
                         continue
                     cur = w[3].get(name)
                     if cur is None:
                         w[3][name] = [mn, mx]
                     else:
-                        cur[0] = min(cur[0], mn)
-                        cur[1] = max(cur[1], mx)
+                        cur[0] = min(cur[0], mn, key=spark_key)
+                        cur[1] = max(cur[1], mx, key=spark_key)
         out = []
         for bk, (d, fp, wr, stats) in writers.items():
             wr.close()
-            if stat_cols:
-                # a requested column with no surviving entry saw only
-                # NULLs — stored as [None, None], which PRUNES (a range
-                # predicate never matches NULL), exactly like the Spark
-                # stats job it replaces
-                full = {name: stats.get(name, [None, None])
-                        for name, _src, _is in stat_cols}
+            full = {name: [_stat_store(v) for v in stats.get(name, (None, None))]
+                    for name, _src in stat_cols}
             out.append({"bucket": str(bk), "dir": d,
                         "bytes": _os.path.getsize(fp),
                         "stats": _json.dumps(full) if stat_cols else None})
@@ -374,11 +374,8 @@ class LakeTable:
         self._maintenance = None  # lazy single-thread compactor
         self._pending_compaction = None
         self._sched_lock = threading.Lock()
-        #: write-time zone-map stats staged by :meth:`write_buckets`,
-        #: keyed by absolute staged dir; consumed (popped) by
-        #: :meth:`commit`. Purely an optimization cache: a dir absent
-        #: here (other process, crash replay, non-string stat column)
-        #: falls back to the post-write stats job.
+        #: zone-map stats computed by :meth:`write_buckets`, keyed by
+        #: absolute staged dir; consumed (popped) by :meth:`commit`.
         self._pending_dir_stats: Dict[str, dict] = {}
 
     # ------------------------------------------------------------------ setup
@@ -821,40 +818,20 @@ class LakeTable:
         sort_cols = [
             c for c in (props.get("sort_cols") or ()) if c in df.columns
         ]
-        # write-time zone-map stats (§ _direct_bucket_writer): engaged
-        # only when EVERY stat-eligible column is STRING-domain (min/max
-        # semantics identical across arrow, the Spark stats job, and the
-        # pruner's Python comparisons) and is ACTUALLY a string in
-        # ``df`` — the df is the ground truth, not the pre-commit
-        # snapshot: a retype rewrite stages data already CAST to the new
-        # type while the snapshot still shows the old one. Partial
-        # coverage would leave a commit-side merge problem, so anything
-        # else keeps the post-write stats job for the whole dir
-        from pyspark.sql.types import StringType, StructType
-
-        def _df_is_str(name: str) -> bool:
-            t = df.schema[name].dataType
-            if isinstance(t, StructType):  # delta spelling r_<c>.v
-                try:
-                    t = t["v"].dataType
-                except KeyError:
-                    return False
-            return isinstance(t, StringType)
-
+        # zone-map stats (§ _direct_bucket_writer), ordered as readers
+        # see the values: a base column by the df's own type — the ground
+        # truth on a retype rewrite, where the snapshot still shows the
+        # old type — and a delta column through the same CAST that read()
+        # applies, as a stats-only column the writer drops
         col_types = {n: t for n, t in snap["schema"]}
-        stat_cols = []
+        stat_cols, casts = [], {}
         for c in (props.get("stats_cols") or ()):
-            if not _stat_domain(col_types.get(c, "")):
-                continue  # never stat-able: the stats job skips it too
-            if (_stat_domain(col_types.get(c, "")) == "str"
-                    and c in df.columns and _df_is_str(c)):
-                stat_cols.append((c, c, False))
-            elif (_stat_domain(col_types.get(c, "")) == "str"
-                  and f"r_{c}" in df.columns and _df_is_str(f"r_{c}")):
-                stat_cols.append((c, f"r_{c}", True))
-            else:
-                stat_cols = []
-                break
+            if c in df.columns:
+                if _stat_domain(df.schema[c].dataType.simpleString()):
+                    stat_cols.append((c, c))
+            elif f"r_{c}" in df.columns and _stat_domain(col_types.get(c, "")):
+                casts[f"__stat_{c}"] = F.expr(f"CAST(`r_{c}`.v AS {col_types[c]})")
+                stat_cols.append((c, f"__stat_{c}"))
         # ``pre_partitioned``: the caller guarantees ``df`` is already
         # hash-partitioned by ``_bucket`` (fused LWW collapse) — the
         # repartition exchange here would move nothing but still cost a
@@ -862,15 +839,13 @@ class LakeTable:
         part = df if pre_partitioned else df.repartition(F.col("_bucket"))
         if sort_cols:
             part = part.sortWithinPartitions("_bucket", *sort_cols)
+        if casts:
+            part = part.withColumns(casts)
         os.makedirs(stage, exist_ok=True)
-        t0 = time.monotonic()
         rows = part.mapInArrow(
             _direct_bucket_writer(stage, tuple(stat_cols)),
             schema="bucket STRING, dir STRING, bytes BIGINT, stats STRING",
         ).collect()  # ≤ one row per (task, bucket): bounded metadata
-        if os.environ.get("PYPGOUT_PROF"):
-            print(f"      [prof] write_buckets job: {time.monotonic() - t0:6.3f}s",
-                  flush=True)
         out: Dict[str, List[str]] = {}
         dir_bytes: Dict[str, int] = {}
         for r in rows:
@@ -879,62 +854,6 @@ class LakeTable:
             if r["stats"] is not None:
                 self._pending_dir_stats[r["dir"]] = json.loads(r["stats"])
         return out, dir_bytes
-
-    def _collect_dir_stats(
-        self,
-        dirmap: Optional[Dict[str, List[str]]],
-        stats_cols: Sequence[str],
-        schema: Sequence[Sequence[str]],
-        key_cols: Sequence[str],
-        delta: bool = False,
-    ) -> Dict[str, dict]:
-        """Per-directory min/max of ``stats_cols`` over freshly staged
-        dirs — ONE column-pruned Spark job over the just-written (page-
-        cache-warm) files, grouped by parent directory, collecting at
-        most one row per staged dir (≤ n_buckets). Delta files carry
-        value columns as ``r_<col>.v`` strings; they are cast back to
-        the table type so delta stats order identically to base stats.
-        Delete rows contribute nothing (their carriers are NULL, which
-        min/max ignore) — correct, since a range predicate cannot match
-        a deleted row either."""
-        dirs = [d for dd in (dirmap or {}).values() for d in dd]
-        col_types = {n: t for n, t in schema}
-        cols = [c for c in stats_cols if c in col_types and _stat_domain(col_types[c])]
-        if not dirs or not cols:
-            return {}
-        keys = set(key_cols)
-        if delta:
-            read_ddl = ", ".join(
-                [f"`{n}` {t}" for n, t in schema if n in keys]
-                + ["final_op STRING", "max_lsn BIGINT"]
-                + [f"`r_{n}` STRUCT<v: STRING>" for n, _ in schema if n not in keys]
-            )
-            exprs = {
-                c: (f"`{c}`" if c in keys else f"CAST(`r_{c}`.v AS {col_types[c]})")
-                for c in cols
-            }
-        else:
-            read_ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
-            exprs = {c: f"`{c}`" for c in cols}
-        sel = [f"{exprs[c]} AS `{c}`" for c in cols]
-        sel.append("regexp_replace(input_file_name(), '/[^/]*$', '') AS __dir")
-        df = self.spark.read.schema(read_ddl).parquet(*dirs).selectExpr(*sel)
-        aggs = []
-        for c in cols:
-            aggs.append(F.min(F.col(c)).alias(f"__mn_{c}"))
-            aggs.append(F.max(F.col(c)).alias(f"__mx_{c}"))
-        rows = df.groupBy("__dir").agg(*aggs).collect()
-        by_key = {_dir_key(d): d for d in dirs}
-        out: Dict[str, dict] = {}
-        for r in rows:
-            d = by_key.get(_dir_key(r["__dir"]))
-            if d is None:
-                continue
-            out[d] = {
-                c: [_stat_store(r[f"__mn_{c}"]), _stat_store(r[f"__mx_{c}"])]
-                for c in cols
-            }
-        return out
 
     def commit(
         self,
@@ -976,7 +895,9 @@ class LakeTable:
 
         ``dir_bytes``: sizes of the newly referenced dirs, as returned
         by :meth:`write_buckets`; carried in the snapshot so no commit
-        or policy decision ever lists the filesystem.
+        or policy decision ever lists the filesystem. Zone-map stats
+        (``dir_stats``) arrive the same way, from the writer: a commit
+        runs no Spark job.
 
         ``cdf_buckets``: feed-only change-set files (delta format) for a
         commit whose data files cannot serve as the change feed (the
@@ -997,44 +918,17 @@ class LakeTable:
         modulus under the new layout would resolve keys against the
         wrong buckets: lost deletes, duplicate keys).
         """
-        # zone maps (props["stats_cols"]): per-dir min/max of the newly
-        # staged base/delta dirs, computed OUTSIDE the commit lock (one
-        # narrow Spark job over staged files; the critical section stays
-        # metadata-only). Props and key_cols are immutable across
-        # commits, so the pre-lock snapshot is authoritative for them;
-        # the effective schema is the one the staged files were written
-        # under (the ``schema`` argument when evolving).
-        pre = self.snapshot()
-        stats_cols = pre.get("props", {}).get("stats_cols") or ()
+        # zone maps (props["stats_cols"]): the writer computed each
+        # staged dir's stats (see write_buckets); cdf sidecar dirs never
+        # carry them. A dir without an entry is simply never pruned.
         new_dir_stats: Dict[str, dict] = {}
-        if stats_cols:
-            # prefer stats the writer computed at write time (zero extra
-            # jobs — see write_buckets); only dirs it could not cover
-            # (other process, crash replay, non-string stat column) pay
-            # the post-write stats job, restricted to exactly those dirs
-            eff_schema = [list(c) for c in (schema or pre["schema"])]
-            for dirmap, is_delta in ((new_buckets, False),
-                                     (delta_buckets, True)):
-                rest: Dict[str, List[str]] = {}
-                for b, dd in (dirmap or {}).items():
-                    miss = []
-                    for d in dd:
-                        st = self._pending_dir_stats.pop(d, None)
-                        if st is not None:
-                            new_dir_stats[d] = st
-                        else:
-                            miss.append(d)
-                    if miss:
-                        rest[b] = miss
-                if rest:
-                    new_dir_stats.update(self._collect_dir_stats(
-                        rest, stats_cols, eff_schema, pre["key_cols"],
-                        delta=is_delta,
-                    ))
-        # cdf sidecar dirs never carry zone maps: drop their staged stats
-        for dd in (cdf_buckets or {}).values():
-            for d in dd:
-                self._pending_dir_stats.pop(d, None)
+        for dirmap, keep in ((new_buckets, True), (delta_buckets, True),
+                             (cdf_buckets, False)):
+            for dd in (dirmap or {}).values():
+                for d in dd:
+                    st = self._pending_dir_stats.pop(d, None)
+                    if keep and st is not None:
+                        new_dir_stats[d] = st
         _maybe_crash("pre_snapshot")
         with _commit_lock(self.meta_dir):
             prev = self.snapshot()

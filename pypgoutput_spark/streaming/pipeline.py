@@ -38,7 +38,6 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import time as _time
 from typing import Callable, Dict, List, Optional, Union
 
 from pyspark.sql import functions as F
@@ -56,19 +55,6 @@ from pypgoutput_spark.wal.generator import RELATION_ID
 #: JVM-side relation id of a DML frame (big-endian int32 at payload[1:5]) —
 #: lets pre-decode filters scope per-relation without touching Python
 _RID_EXPR = "CAST(conv(hex(substring(payload, 2, 4)), 16, 10) AS BIGINT)"
-
-#: phase-level timing marks (guide §1): set PYPGOUT_PROF=1 to print how
-#: each micro-batch's wall splits across stats scan / aux lookup /
-#: decode+merge — profiling aid only, zero cost when unset
-_PROF = bool(os.environ.get("PYPGOUT_PROF"))
-
-
-def _prof(label: str, t0: float) -> float:
-    if _PROF:
-        now = _time.monotonic()
-        print(f"    [prof] {label}: {now - t0:6.3f}s", flush=True)
-        return now
-    return t0
 
 
 def evolve_to_relation(table: LakeTable, rv, key_cols) -> bool:
@@ -572,7 +558,6 @@ def apply_frames_batch(
     """
     single = isinstance(tables, LakeTable)
     table_map: Dict[int, LakeTable] = {relation_id: tables} if single else dict(tables)
-    _t = _time.monotonic()
 
     # ---- batch stats: one metadata-only scan, grouped by segment --------
     # (Truncate LSNs ride along as a collect_list over the lsn column, so
@@ -594,7 +579,6 @@ def apply_frames_batch(
     else:
         aggs = _segment_stats_aggs(frames, skip_foreign_origins, live)
         seg_rows = frames.groupBy("segment").agg(*aggs).collect()
-        _t = _prof("stats scan", _t)
     late_frames = int(sum(r["n_late"] for r in seg_rows))
     # mid-stream DDL: merge the batch's R cohort into the caller's registry
     # — but only when the stats scan saw R frames, so the common DML-only
@@ -657,7 +641,6 @@ def apply_frames_batch(
                 .select("segment", "lsn", "payload")
                 .collect()
             )
-            _t = _prof("aux lookup", _t)
         for row in aux:
             payload = bytes(row["payload"])
             first = payload[0:1]
@@ -928,7 +911,6 @@ def apply_frames_batch(
             keys, [n for n, _ in snap["schema"] if n not in keys], snap,
         )
         n_projections += len(vs)
-    _t = _prof("evolve/plan", _t)
 
     raw = decode_op.decode_frames_raw(
         eff_frames, registry, strict=strict, clustered=clustered,
@@ -1000,7 +982,6 @@ def apply_frames_batch(
             # (messages-only staging needs no explicit materializer: the
             # observed message write below is the first action over the
             # cache and populates it)
-            _t = _prof("stage/materialize", _t)
 
         # ---- two-phase staging and resolution (see docstring) ----------
         events_src = raw
@@ -1029,7 +1010,6 @@ def apply_frames_batch(
                         F.expr(_truncate_floor_expr("relation_id", t_void))
                     )
                 events_src = events_src.unionByName(stg)
-                _t = _prof("2pc staged-read plan", _t)
             if commit_now:
                 # stamp the true commit timestamp from 'K' onto the
                 # resolved transactions' events (decode stamped the
@@ -1055,7 +1035,6 @@ def apply_frames_batch(
                     F.col("xid").isin(stage_xids) & ~F.col("op").isin(*markers)
                 )
                 n_staged_rows = _observed_write(pend_df, pending_dir)
-                _t = _prof("2pc staging write", _t)
             new_pending = next_pending  # precomputed driver-side above
             two_metrics = {
                 "prepared": sorted(all_prepared),
@@ -1176,11 +1155,9 @@ def apply_frames_batch(
                 }
                 for rid, fut in futs.items():
                     out["relations"][rid] = fut.result()
-            _t = _prof("merges (parallel)", _t)
         else:
             for rid, tbl in managed.items():
                 out["relations"][rid] = _merge_one(rid, tbl)
-                _t = _prof(f"merge rid={rid}", _t)
         # staging GC: with nothing pending any more, the staged files are
         # unreferenced (PG xids never recur). Strictly AFTER the merges:
         # a crash before the commits must leave the files for the replay.

@@ -12,10 +12,15 @@ driver-side before any file opens. These tests pin:
     ONLY the matching commit's files (asserted via inputFiles);
   - all-NULL directories prune; missing stats / legacy tables never
     prune; stats maps shrink with the referenced file set;
-  - ``sort_cols`` pushes the range to the parquet reader (PushedFilters).
+  - ``sort_cols`` pushes the range to the parquet reader (PushedFilters);
+  - the bucket writer computes every stats domain (num, dec, iso, str)
+    exactly as Spark orders it, NaN included, at no extra Spark job.
 """
 
 from __future__ import annotations
+
+import decimal
+import json
 
 from pypgoutput_spark.lake.table import LakeTable, _zones_may_match
 from pypgoutput_spark.operators.merge import merge_into
@@ -257,52 +262,208 @@ def test_scan_with_sql_spelled_timestamp_bounds(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_write_time_stats_equal_stats_job(spark, tmp_path):
-    """String-domain stats_cols ride the write itself (the direct
-    writer's per-bucket min/max — zero extra jobs); the recorded
-    dir_stats must be EXACTLY what the post-write stats job would have
-    computed for the same dirs, for base (plain column) and delta
-    (r_<col>.v struct) writes alike, including NULL carriers."""
-    t = LakeTable.create(
-        spark, str(tmp_path / "wt"),
-        schema=[("k", "string"), ("name", "string")],
-        key_cols=["k"], n_buckets=2, props={"stats_cols": ["name"]},
-    )
-    merge_into(t, spark.createDataFrame(
-        [("a", "I", 10, {"v": "mango"}), ("b", "I", 10, {"v": "apple"}),
-         ("c", "I", 10, {"v": None})],
-        schema="k STRING, final_op STRING, max_lsn BIGINT, r_name STRUCT<v: STRING>",
-    ), watermark_lsn=10)
-    merge_into(t, spark.createDataFrame(
-        [("b", "U", 20, {"v": "zebra"}), ("c", "D", 20, None)],
-        schema="k STRING, final_op STRING, max_lsn BIGINT, r_name STRUCT<v: STRING>",
-    ), watermark_lsn=20, auto_compact=False)
-    snap = t.snapshot()
-    got = snap["dir_stats"]
-    assert got, "stats_cols table must record dir_stats"
-    # every referenced dir has a stats entry for the string column
-    ref = [d for dd in snap["buckets"].values() for d in dd] + [
-        d for dd in snap.get("deltas", {}).values() for d in dd
+#: typed zone-map table: one column per stats domain (num, dec, iso, str)
+_TYPED_SCHEMA = [("k", "string"), ("name", "string"), ("i", "bigint"),
+                 ("x", "double"), ("d", "decimal(10,2)"), ("ts", "timestamp"),
+                 ("dt", "date")]
+_TYPED_VALUES = [c for c, _ in _TYPED_SCHEMA if c != "k"]
+
+
+def _typed_changes(spark, rows):
+    """rows: (k, final_op, max_lsn, {col: wire text or None}); a column
+    absent from the dict is not carried (NULL struct, TOAST-unchanged)."""
+    data = [
+        (k, op, lsn, *[({"v": vals[c]} if c in vals else None)
+                       for c in _TYPED_VALUES])
+        for k, op, lsn, vals in rows
     ]
-    assert set(got) == set(ref)
-    # recompute via the stats JOB over the same dirs: must match exactly
-    eff = [list(c) for c in snap["schema"]]
-    want = {}
-    want.update(t._collect_dir_stats(
-        snap["buckets"], ["name"], eff, snap["key_cols"], delta=False))
-    want.update(t._collect_dir_stats(
-        snap.get("deltas", {}), ["name"], eff, snap["key_cols"], delta=True))
-    assert got == want
-    # and pruning on those stats behaves: a range above every max prunes
+    return spark.createDataFrame(
+        data,
+        schema="k STRING, final_op STRING, max_lsn BIGINT, " + ", ".join(
+            f"r_{c} STRUCT<v: STRING>" for c in _TYPED_VALUES),
+    )
+
+
+def _assert_stats(snap, kind, want):
+    """The stats entry of every ``kind`` dir ("buckets" or "deltas"),
+    by bucket, equals ``want`` — compared as canonical JSON so NaN
+    equals NaN."""
+    got = {b: snap["dir_stats"][d]
+           for b, dd in snap.get(kind, {}).items() for d in dd}
+    assert sum(len(dd) for dd in snap.get(kind, {}).values()) == len(got)
+    assert json.dumps(got, sort_keys=True) == json.dumps(want, sort_keys=True)
+
+
+def _assert_scan_equals_filtered_read(t, ranges):
+    from pyspark.sql import functions as F
+
+    for c, (lo, hi) in ranges:
+        cond = F.lit(True)
+        if lo is not None:
+            cond = cond & (F.col(c) >= F.lit(lo))
+        if hi is not None:
+            cond = cond & (F.col(c) <= F.lit(hi))
+        got = sorted(r["k"] for r in t.scan({c: (lo, hi)}).collect())
+        want = sorted(r["k"] for r in t.read().filter(cond).collect())
+        assert got == want, f"{c} in [{lo}, {hi}]: scan {got} != read {want}"
+
+
+def test_write_time_stats_equal_stats_job(spark, tmp_path):
+    """The bucket writer records every stats domain (num, dec, iso, str)
+    for base (plain column) and delta (``r_<col>.v`` cast to the table
+    type) writes, and compaction re-states the rewritten base. The
+    expected entries are the values the former post-write Spark stats
+    job recorded for the same writes, pinned literally. Two traps:
+
+      - NaN: Spark orders NaN above every number, so a directory holding
+        a NaN has max NaN and an all-NaN directory [NaN, NaN] — arrow's
+        NaN-skipping min_max would prune them and drop rows that
+        ``read().filter("x >= 5.0")`` returns;
+      - a timestamp with an offset is stored as naive session-zone (UTC)
+        wall time, the spelling scan bounds are compared in.
+    """
+    nan = float("nan")
+    t = LakeTable.create(
+        spark, str(tmp_path / "wt"), schema=_TYPED_SCHEMA,
+        key_cols=["k"], n_buckets=2, props={"stats_cols": _TYPED_VALUES},
+    )
+    # bucket 0: a, c, d — bucket 1: b, e, i
+    merge_into(t, _typed_changes(spark, [
+        ("a", "I", 10, {"name": "mango", "i": "5", "x": "1.5", "d": "10.25",
+                        "ts": "2024-06-10 08:00:00", "dt": "2024-06-10"}),
+        ("c", "I", 10, {"name": None, "i": "-7", "x": "NaN", "d": "-3.10",
+                        "ts": "2024-06-11 02:00:00+02", "dt": "2024-01-31"}),
+        ("d", "I", 10, {"name": "kiwi", "i": None, "x": None, "d": None,
+                        "ts": None, "dt": None}),
+        ("b", "I", 10, {"name": "apple", "i": "100", "x": "7.25",
+                        "d": "99999999.99", "ts": "2024-06-12 23:59:59.5",
+                        "dt": "2024-06-12"}),
+        ("e", "I", 10, {"name": "fig", "i": "9007199254740993", "x": "-0.5",
+                        "d": "0.01", "ts": "2024-06-09 00:00:00",
+                        "dt": "2023-12-31"}),
+        ("i", "I", 10, {"name": "plum", "i": "3", "x": "2.0", "d": "1.00",
+                        "ts": "2024-06-09 12:00:00", "dt": "2024-02-29"}),
+    ]), watermark_lsn=10)
+    snap = t.snapshot()
+    _assert_stats(snap, "buckets", {
+        "0": {"name": ["kiwi", "mango"], "i": [-7, 5], "x": [1.5, nan],
+              "d": ["-3.10", "10.25"], "dt": ["2024-01-31", "2024-06-10"],
+              "ts": ["2024-06-10T08:00:00", "2024-06-11T00:00:00"]},
+        "1": {"name": ["apple", "plum"], "i": [3, 9007199254740993],
+              "x": [-0.5, 7.25], "d": ["0.01", "99999999.99"],
+              "dt": ["2023-12-31", "2024-06-12"],
+              "ts": ["2024-06-09T00:00:00", "2024-06-12T23:59:59.500000"]},
+    })
+    ranges = [
+        ("i", (None, 0)), ("i", (6, None)), ("i", (9007199254740993, None)),
+        ("x", (5.0, None)), ("x", (None, 2.0)), ("x", (1.5, 1.5)),
+        ("d", (decimal.Decimal("10.25"), None)),
+        ("d", (None, decimal.Decimal("0.01"))),
+        ("ts", ("2024-06-11 00:00:00", "2024-06-11 00:00:00")),
+        ("ts", ("2024-06-12 00:00:00", None)),
+        ("dt", ("2024-06-01", None)), ("dt", (None, "2024-01-31")),
+        ("name", ("zz", None)), ("name", ("m", "n")),
+    ]
+    _assert_scan_equals_filtered_read(t, ranges)
+
+    # delta write into bucket 1 only (bucket 0 stays clean and prunable):
+    # its x carriers are all NaN, e carries only x, i is deleted
+    merge_into(t, _typed_changes(spark, [
+        ("b", "U", 20, {"name": "zebra", "i": "50", "x": "NaN", "d": "12.50",
+                        "ts": "2024-06-13 01:00:00-03", "dt": "2024-07-01"}),
+        ("e", "U", 20, {"x": "NaN"}),
+        ("i", "D", 20, {}),
+    ]), watermark_lsn=20, auto_compact=False)
+    snap = t.snapshot()
+    assert list(snap["deltas"]) == ["1"]
+    _assert_stats(snap, "deltas", {
+        "1": {"name": ["zebra", "zebra"], "i": [50, 50], "x": [nan, nan],
+              "d": ["12.50", "12.50"], "dt": ["2024-07-01", "2024-07-01"],
+              "ts": ["2024-06-13T04:00:00", "2024-06-13T04:00:00"]},
+    })
+    _assert_scan_equals_filtered_read(t, ranges)
     assert t.scan({"name": ("zz", None)}).count() == 0
     assert sorted(r["name"] for r in t.scan({"name": ("m", "n")}).collect()) == ["mango"]
+
+    # compaction rewrites bucket 1 as resolved base: an all-NaN x dir
+    t.compact()
+    snap = t.snapshot()
+    assert not snap.get("deltas")
+    _assert_stats(snap, "buckets", {
+        "0": {"name": ["kiwi", "mango"], "i": [-7, 5], "x": [1.5, nan],
+              "d": ["-3.10", "10.25"], "dt": ["2024-01-31", "2024-06-10"],
+              "ts": ["2024-06-10T08:00:00", "2024-06-11T00:00:00"]},
+        "1": {"name": ["fig", "zebra"], "i": [50, 9007199254740993],
+              "x": [nan, nan], "d": ["0.01", "12.50"],
+              "dt": ["2023-12-31", "2024-07-01"],
+              "ts": ["2024-06-09T00:00:00", "2024-06-13T04:00:00"]},
+    })
+    _assert_scan_equals_filtered_read(t, ranges)
+    # the all-NaN directory is kept: its rows are above every number
+    assert {"b", "e"} <= {r["k"] for r in t.scan({"x": (5.0, None)}).collect()}
+
+
+def _count_jobs(spark, fn):
+    """(fn's result, number of Spark jobs fn ran), counted through a
+    fresh job group; the caller's group is restored afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"zonemap-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_typed_stats_cost_no_extra_jobs(spark, tmp_path):
+    """A BIGINT stats column rides the write: a MOR merge runs as many
+    Spark jobs as on a table without stats_cols, and its commit runs
+    none. Every referenced base and delta dir still gets a stats entry,
+    and so does every base dir compaction rewrites."""
+    base = _changes(spark, [(f"k{i}", "I", 10 + i, i, f"n{i}") for i in range(20)])
+    upd = _changes(spark, [(f"k{i}", "U", 210 + i, 500 + i, f"u{i}") for i in range(0, 20, 3)])
+    counts = {}
+    for name, props in (("plain", None), ("typed", {"stats_cols": ["ts", "name"]})):
+        t = _mk(spark, tmp_path, name, props=props)
+        merge_into(t, base, watermark_lsn=100, auto_compact=False)
+        commit_jobs = []
+        commit = t.commit
+
+        def counted(*args, **kwargs):
+            v, n = _count_jobs(spark, lambda: commit(*args, **kwargs))
+            commit_jobs.append(n)
+            return v
+
+        t.commit = counted
+        _, counts[name] = _count_jobs(
+            spark, lambda: merge_into(t, upd, watermark_lsn=300, auto_compact=False))
+        assert commit_jobs == [0], name
+    assert counts["typed"] == counts["plain"], counts
+
+    def referenced(snap):
+        return [d for kind in ("buckets", "deltas")
+                for dd in snap.get(kind, {}).values() for d in dd]
+
+    snap = t.snapshot()
+    assert snap["deltas"], "precondition: the update landed as MOR deltas"
+    assert all(set(snap["dir_stats"][d]) == {"ts", "name"} for d in referenced(snap))
+    t.compact()
+    snap = t.snapshot()
+    assert not snap.get("deltas")
+    assert all(set(snap["dir_stats"][d]) == {"ts", "name"} for d in referenced(snap))
+    assert _rows(t.scan({"ts": (500, None)})) == _rows(t.read().filter("ts >= 500"))
 
 
 def test_retype_rewrite_with_stats_cols_stays_correct(spark, tmp_path):
     """A retype rewrite stages data already CAST to the NEW type while
-    the pre-commit snapshot still shows the old one — the write-time
-    stats fast path must gate on the DataFrame's actual type (falling
-    back to the stats job), not crash serializing non-string minima."""
+    the pre-commit snapshot still shows the old one — the writer's
+    stats must follow the DataFrame's actual type (numeric minima, not
+    the old string order), not crash serializing non-string minima."""
     from pypgoutput_spark.plans.registry import SchemaAction
 
     t = LakeTable.create(
@@ -320,7 +481,7 @@ def test_retype_rewrite_with_stats_cols_stays_correct(spark, tmp_path):
     assert dict(snap["schema"])["name"] == "bigint"
     assert sorted(r["name"] for r in t.read().collect()) == [3, 7, 11]
     # stats recorded for the rewritten dirs under the NEW (num) domain,
-    # via the fallback job — and numeric pruning works on them
+    # by the writer — and numeric pruning works on them
     ref = [d for dd in snap["buckets"].values() for d in dd]
     assert all(d in snap["dir_stats"] for d in ref)
     assert sorted(r["name"] for r in t.scan({"name": (5, None)}).collect()) \
